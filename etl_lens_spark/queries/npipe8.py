@@ -129,10 +129,11 @@ def rank_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # passes that previously overlapped inside one job; this
     # formulation needs only this one O(docs)-wide pass, no barrier).
     # Identical algebra: a NULL-text doc contributed no toks rows,
-    # hence no dl row — the isNotNull filter reproduces that; explode
-    # counted every split element including empty strings, as size
-    # does; per-(doc, term) groups existed only where tf >= 1, hence
-    # the tf > 0 filter after the stack unpivot.
+    # hence no dl row — the text filter reproduces that (not a filter
+    # on dlen: with spark.sql.ansi.enabled=false, size(NULL) is -1,
+    # not NULL); explode counted every split element including empty
+    # strings, as size does; per-(doc, term) groups existed only where
+    # tf >= 1, hence the tf > 0 filter after the stack unpivot.
     words = F.split(F.lower("text"), " ")
 
     def _tf_count(term: str) -> Column:
@@ -140,14 +141,14 @@ def rank_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 2-parameter lambda in F.filter as (element, index)
         return F.size(F.filter(words, lambda x: x == F.lit(term)))
 
-    per_doc = docs.select(
+    per_doc = docs.filter(F.col("text").isNotNull()).select(
         "doc_id",
         F.size(words).alias("dlen"),
         *[
             _tf_count(t).alias(f"__tf{i}")
             for i, t in enumerate(_RRF_TERMS)
         ],
-    ).filter(F.col("dlen").isNotNull())
+    )
     # O(docs) narrow rollup consumed by the corpus stats, the df
     # counts and the score join — stage it once (guide §5)
     per_doc = stage(per_doc, "rrf_per_doc")

@@ -9,6 +9,19 @@ from etl_lens_spark import get_spark
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _named_nodeids(config) -> set[str]:
+    """The ``path::name`` arguments of this run, as rootdir nodeids."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if not sep:
+            continue
+        full = os.path.join(str(config.invocation_params.dir), path)
+        rel = os.path.relpath(full, str(config.rootpath))
+        named.add(rel.replace(os.sep, "/") + "::" + rest)
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
     """Two-tier suite (round-12 verdict item 7): the default run —
     what the driver's bounded-window ``pytest tests/ -x -q`` gate
@@ -28,9 +41,13 @@ def pytest_collection_modifyitems(config, items):
       (tools/oracle_check.py executes every query anyway); headline
       queries stay in the fast tier because the bench depends on
       them.
+
+    A slow-tier test named on the command line — by its nodeid, or by
+    its parametrized function's or class's — runs anyway.
     """
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
+    named = _named_nodeids(config)
     here = os.path.dirname(os.path.abspath(__file__))
     try:
         with open(os.path.join(here, "slow_nodeids.txt")) as f:
@@ -43,10 +60,16 @@ def pytest_collection_modifyitems(config, items):
         slow_ids = set()
     headline = None
     skip = pytest.mark.skip(
-        reason="slow tier — set SPARK_GRAFT_FULL_TESTS=1 to run"
+        reason="slow tier — set SPARK_GRAFT_FULL_TESTS=1 (or name this "
+        "nodeid on the command line) to run"
     )
     for item in items:
         nodeid = item.nodeid
+        if any(
+            nodeid == n or nodeid.startswith((n + "[", n + "::"))
+            for n in named
+        ):
+            continue
         if "slow" in item.keywords or nodeid in slow_ids:
             item.add_marker(skip)
             continue

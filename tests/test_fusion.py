@@ -1,5 +1,7 @@
 """RRF fusion: planted-relevance uplift + the published formula."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from etl_lens_spark.similarity.fusion import rrf_fuse
@@ -146,3 +148,49 @@ def test_scd2_pit_join_conservation(spark, sf_dir):
     for a, b in zip(one, one[1:]):
         assert a["valid_to_us"] == b["valid_from_us"]  # tiling
     assert one[-1]["valid_to_us"] is None and one[-1]["is_current"] == 1
+
+
+def test_rrf_query_ignores_null_text_under_both_ansi_modes(
+    spark, sf_dir, tmp_path
+):
+    """NULL-text docs contribute nothing to the BM25 side (the oracle's
+    unnest yields no tokens for them), whatever ANSI mode says: with
+    ``spark.sql.ansi.enabled=false`` ``size(NULL)`` is -1, not NULL,
+    so a filter on the word count let them into ``n_docs`` and
+    ``avgdl``. The fixture plus 500 NULL-text docs must give the
+    fixture's own rows in both modes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_lens_spark.queries import REGISTRY, all_queries
+
+    all_queries()
+    fn = REGISTRY["rank_rrf_fusion"].fn
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    nulls = pa.table(
+        {
+            c: pa.nulls(500, docs.schema.field(c).type)
+            for c in docs.column_names
+        }
+    ).set_column(
+        0, "doc_id", pa.array(range(10**6, 10**6 + 500), pa.int64())
+    )
+    pq.write_table(
+        pa.concat_tables([docs, nulls]), tmp_path / "documents.parquet"
+    )
+    os.symlink(
+        os.path.join(sf_dir, "embeddings.parquet"),
+        tmp_path / "embeddings.parquet",
+    )
+
+    def rows(d):
+        return sorted(tuple(r) for r in fn(spark, str(d)).collect())
+
+    want = rows(sf_dir)
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            assert rows(tmp_path) == want, f"ansi={ansi}"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)

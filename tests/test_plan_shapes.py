@@ -540,6 +540,11 @@ def test_staged_interior_plan_pin(spark, sf_dir, name):
 
     with staging.capture() as cap:
         REGISTRY[name].fn(spark, sf_dir)
+        # a label staged twice would collapse in the dict and leave
+        # one of its plans unpinned
+        assert len(dict(cap)) == len(cap), (
+            f"{name}: duplicate staged labels {[label for label, _ in cap]}"
+        )
         frames = dict(cap)
     pins = STAGED_INTERIOR_PINS[name]
     missing = set(pins) - set(frames)
