@@ -1,7 +1,13 @@
 """Benchmark harness: timed runs of the headline queries.
 
-Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``. The FINAL stdout line is the compact
+``python3 bench.py [query ...]`` times the named headline queries (all
+47 by default) at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
+fixtures) on ``local[$SPARK_GRAFT_CPUS]``. It is the one
+timing loop: an A/B rep is one ``bench.py <query ...>`` process per
+checkout, alternating checkouts, read through ``calibration_sec`` and
+the detail line's ``runs``; a scale point is
+``SPARK_GRAFT_SF_DIR=.scratch/sfbig python3 bench.py`` after
+``tools/make_scale.py``. The FINAL stdout line is the compact
 contract JSON:
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries":
 {name: sec, ...}, "sf": ...}`` (plus the calibration summary) —
@@ -83,18 +89,25 @@ def _calibration_df(spark):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from etl_lens_spark import get_spark
-    from etl_lens_spark.queries import BENCH_SETUP, headline_queries
+    from etl_lens_spark.queries import (
+        BENCH_SETUP,
+        headline_queries,
+        timed_thunk,
+    )
 
+    heads = list(headline_queries())
+    names = sys.argv[1:] or heads
+    unknown = sorted(set(names) - set(heads))
+    if unknown:
+        sys.exit(f"not headline queries: {', '.join(unknown)}")
     spark = get_spark(app_name="etl-lens-bench")
 
     def run_full(df) -> None:
         # noop sink: materializes all columns AND runs top-level sorts
         df.write.format("noop").mode("overwrite").save()
 
-    specs = headline_queries()
-    # warm-up: run the first headline query once (JVM + codegen warm)
-    first = next(iter(specs.values()))
-    run_full(first.fn(spark, sf_dir))
+    # warm-up: run the first query once (JVM + codegen warm)
+    run_full(timed_thunk(names[0], spark, sf_dir)())
 
     # calibration anchor: 3 runs, all reported (min is the number to
     # divide between rounds — see module docstring)
@@ -110,21 +123,17 @@ def main() -> None:
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     setup_secs: dict[str, list[float]] = {}
-    for name, spec in specs.items():
-        prepare = BENCH_SETUP.get(name)
+    for name in names:
         runs: list[float] = []
         for _ in range(2):
-            if prepare is not None:
-                s0 = time.perf_counter()
-                thunk = prepare(spark, sf_dir)
+            s0 = time.perf_counter()
+            thunk = timed_thunk(name, spark, sf_dir)
+            if name in BENCH_SETUP:
                 setup_secs.setdefault(name, []).append(
                     round(time.perf_counter() - s0, 3)
                 )
-                t0 = time.perf_counter()
-                run_full(thunk())
-            else:
-                t0 = time.perf_counter()
-                run_full(spec.fn(spark, sf_dir))
+            t0 = time.perf_counter()
+            run_full(thunk())
             runs.append(round(time.perf_counter() - t0, 3))
         all_runs[name] = runs
         timings[name] = min(runs)
@@ -165,7 +174,7 @@ def main() -> None:
         "runs": all_runs,
         "calibration_runs": cal_runs,
         "calibration_end_runs": cal_end_runs,
-        "split_queries": sorted(BENCH_SETUP),
+        "split_queries": sorted(set(BENCH_SETUP) & set(names)),
         "untimed_setup_sec": setup_secs,
     }
     print(json.dumps(detail))

@@ -91,6 +91,19 @@ def bench_setup(name: str):
     return deco
 
 
+def timed_thunk(
+    name: str, spark: SparkSession, sf_dir: str
+) -> Callable[[], DataFrame]:
+    """The part of query ``name`` a timing or plan tool measures: for
+    a split query, run its untimed setup now and return the answer
+    thunk; otherwise return a thunk that builds the whole query."""
+    _load()
+    prepare = BENCH_SETUP.get(name)
+    if prepare is not None:
+        return prepare(spark, sf_dir)
+    return lambda: REGISTRY[name].fn(spark, sf_dir)
+
+
 _loaded = False
 
 

@@ -1121,7 +1121,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest price — hash-exact cross-engine. 100 TB: the grouped
     (value, counts) table is the only corpus-sized shuffle; the
     prefix-sum operator's offsets join is O(P²) over partition
-    counts, measured in tools/probe_conf_tuning.py."""
+    counts, measured in PLANS.md's "Round-5 conf-tuning sweep"."""
     from etl_lens_spark.operators.prefix import ordered_prefix_sums
 
     t = load_table(spark, sf_dir, "orders").select(

@@ -8,6 +8,8 @@ CI instead of only showing up in BENCH_r{N}."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from etl_lens_spark.queries import REGISTRY, _load
@@ -573,3 +575,74 @@ def test_staged_interior_plan_pin(spark, sf_dir, name):
             f"{sorted(want_joins)}), python {sorted(got_py)} (pinned "
             f"{sorted(want_py)}). Re-audit if intentional.\n{plan}"
         )
+
+
+# ------------------------------------------------------------------
+# Fused LSH guard (round-12 verdict item 1): guarded_insert_support's
+# window and self-join share ONE band-key shuffle — the join's second
+# branch reads it as a ReusedExchange once AQE has run. Bound: the
+# exchanges in the guard subtree (the first ShuffledHashJoin) of the
+# committed pre-execution plan plans/r12/dedup_incremental_lsh_cdf_after.txt.
+# ------------------------------------------------------------------
+
+_NODE = re.compile(r"^[ :+\-]*(?:\*(?:\(\d+\))? )?(\w+)")
+
+
+def _subtree(plan: str, node: str) -> list[str]:
+    """Node names of the subtree rooted at the first ``node`` in a
+    plan tree (explain's formatted or string form)."""
+    rows = [_NODE.match(line) for line in plan.splitlines()]
+    rows = [m for m in rows if m]
+    starts = [i for i, m in enumerate(rows) if m.group(1) == node]
+    assert starts, f"no {node} in plan:\n{plan}"
+    start = starts[0]
+    col = rows[start].start(1)
+    out = [node]
+    for m in rows[start + 1 :]:
+        if m.start(1) <= col:
+            break
+        out.append(m.group(1))
+    return out
+
+
+def test_guarded_insert_support_reuses_band_exchange(spark):
+    import os
+
+    from pyspark.sql import functions as F
+
+    from etl_lens_spark.dedup import minhash as mh
+
+    def banded(lo, hi):
+        # docs sharing id % 5 share every band: 5 buckets per band
+        docs = spark.range(lo, hi).select(
+            F.col("id").alias("doc_id"),
+            F.transform(
+                F.sequence(F.lit(0), F.lit(7)),
+                lambda i: (F.col("id") % 5) * 100 + i,
+            ).alias("sig"),
+        )
+        return mh.banded_rows(docs, "doc_id", "sig", bands=4)
+
+    # the delta pushes buckets 0-2 from 8 to 10 rows (over the guard:
+    # retract) and buckets 3-4 to 9 (stay small: grant), once per band
+    deltas = mh.guarded_insert_support(
+        banded(40, 48), banded(0, 40), max_bucket=9
+    )
+    assert {r["d_support"] for r in deltas.collect()} == {-4, 4}
+    executed = deltas._jdf.queryExecution().executedPlan().toString()
+    final = _subtree(
+        executed.split("== Initial Plan ==")[0], "ShuffledHashJoin"
+    )
+    with open(
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "plans",
+            "r12",
+            "dedup_incremental_lsh_cdf_after.txt",
+        )
+    ) as f:
+        after = _subtree(f.read().split("\n\n")[0], "ShuffledHashJoin")
+    n_after = sum(n.endswith("Exchange") for n in after)
+    n_final = sum(n.endswith("Exchange") for n in final)
+    assert "ReusedExchange" in final, executed
+    assert 0 < n_final <= n_after, (n_final, n_after, executed)

@@ -1,10 +1,10 @@
 """Capture .explain("formatted") for every headline query.
 
 Writes ``plans/r12/<name>_<tag>.txt`` for each headline query (tag =
-``before``/``after`` via argv). Split queries (queries.BENCH_SETUP)
-run their untimed setup first and the plan captured is the TIMED
-thunk's — the operator the bench measures. Optionally restrict to a
-subset: ``python tools/capture_plans.py before [query ...]``.
+``before``/``after`` via argv). The plan captured is the one bench.py
+times (``queries.timed_thunk``: split queries run their untimed setup
+first). Optionally restrict to a subset:
+``python tools/capture_plans.py before [query ...]``.
 """
 
 from __future__ import annotations
@@ -14,7 +14,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -22,28 +23,19 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r12",
-    )
+    out_dir = os.path.join(ROOT, "plans", "r12")
     os.makedirs(out_dir, exist_ok=True)
 
     from etl_lens_spark import get_spark
-    from etl_lens_spark.queries import BENCH_SETUP, headline_queries
+    from etl_lens_spark.queries import headline_queries, timed_thunk
 
     spark = get_spark(app_name=f"etl-lens-plans-{tag}")
-    specs = headline_queries()
-    for name, spec in specs.items():
+    for name in headline_queries():
         if only and name not in only:
             continue
         spark.sparkContext.setJobDescription(f"plan: {name}")
         try:
-            prepare = BENCH_SETUP.get(name)
-            if prepare is not None:
-                df = prepare(spark, SF_DIR)()
-            else:
-                df = spec.fn(spark, SF_DIR)
+            df = timed_thunk(name, spark, SF_DIR)()
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")

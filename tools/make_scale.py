@@ -4,9 +4,12 @@
 ``factor``x (default 10) into .scratch/sfbig/, offsetting every key
 column by copy_index * range so joins keep exactly the same selectivity
 per copy (each copy is a disjoint universe; dims region/nation are
-shared). Used by tools/scale_probe.py to measure how headline-query
-runtime scales with input size — the local stand-in for the 100 TB
-question "is anything super-linear?".
+shared). ``SPARK_GRAFT_SF_DIR=.scratch/sfbig python3 bench.py`` then
+measures how headline-query runtime scales with input size — the
+local stand-in for the 100 TB question "is anything super-linear?".
+The output sits beside, not inside, the per-process ``run_<pid>``
+scratch dirs, which the next engine process sweeps once their
+process has exited.
 """
 
 from __future__ import annotations
@@ -15,12 +18,12 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
 from etl_lens_spark import get_spark
-from etl_lens_spark.sources.sinks import scratch_path
 
 SRC = "/root/testdata/sf0.1"
 
@@ -54,7 +57,7 @@ UNITS = {
 
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_dir = scratch_path("sfbig")
+    out_dir = os.path.join(ROOT, ".scratch", "sfbig")
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir)
     spark = get_spark(app_name="make-scale")
